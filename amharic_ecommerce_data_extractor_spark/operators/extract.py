@@ -1,19 +1,21 @@
 """Entity-extraction operator: the engine's single Python stage.
 
 Replaces the reference's per-row driver loop (``model_evaluator.py:130-142``,
-batch size 1 per model call) with ONE fused, Arrow-batched ``mapInPandas``
-pass per partition:
+batch size 1 per model call) with ONE scalar Arrow UDF (``F.arrow_udf``)
+over the text column, returning a struct of entity columns:
 
     content → preprocess (kernels.textprep, exact reference chain)
             → message tokenizer → BIO rule labeling (kernels.labeler)
             → entity grouping + price parsing
 
-Everything downstream (triples, joins, aggregations) is pure JVM column work;
-this operator is the only Python/Arrow boundary in the pipeline. The plan is
-narrow — no shuffle — so it scales linearly with partitions at any input
-size; the per-executor cost is one Arrow round-trip per batch.
+Only the text column crosses the Arrow boundary; every other column stays
+JVM-side, and everything downstream (triples, joins, aggregations) is pure
+JVM column work. The plan is narrow — no shuffle — so it scales linearly
+with partitions at any input size; the per-executor cost is one Arrow
+round-trip per batch.
 
-Backends:
+Backends (all behind the same UDF; they differ only in how a batch's
+distinct clean texts become records):
 * ``rules`` (default): deterministic kernel — the parity-testable "model".
 * ``hf``: HuggingFace token-classification (reference ``model_evaluator.py:81``
   semantics). Loaded lazily ONCE PER EXECUTOR PROCESS via a module-level
@@ -24,12 +26,13 @@ Backends:
   checkpoint (tests/fixtures/tiny_ner_model.npz) with HF-compatible span
   output — executes the exact model-backend plumbing (per-executor
   singleton load, Arrow batch inference, char-span emission, N2 alignment)
-  end-to-end with zero external dependencies. All three backends share the
-  Spark-side plumbing (schema, batching, fusion) and the span→record
-  postprocessing.
+  end-to-end with zero external dependencies. The two model backends share
+  the span→record postprocessing.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import pandas as pd
 
@@ -97,6 +100,12 @@ def _preprocess_unique(uniques) -> list[str]:
     return out
 
 
+def _extract_batch_rules(clean: list[str], with_contact_rule: bool) -> list[dict]:
+    """Rules batch path: the memoized labeling kernel per clean text."""
+    return [lb.extract_message_cached(c, with_contact_rule=with_contact_rule)
+            for c in clean]
+
+
 def _hf_pipeline(model_dir: str):
     """Per-executor lazy singleton for the HF backend (one load per python
     worker process, shared across Arrow batches)."""
@@ -141,13 +150,12 @@ def _records_from_spans(texts: list[str], results: list[list[dict]]) -> list[dic
     return out
 
 
-def _extract_batch_hf(clean: pd.Series, model_dir: str) -> list[dict]:
+def _extract_batch_hf(clean: list[str], model_dir: str) -> list[dict]:
     """HF batch path: one pipeline call per Arrow batch (amortizes the
     Python↔native boundary the reference crossed per single sentence)."""
     pipe = _hf_pipeline(model_dir)
-    texts = clean.fillna("").tolist()
-    results = pipe([t if t.strip() else "-" for t in texts], batch_size=64)
-    return _records_from_spans(texts, results)
+    results = pipe([t if t.strip() else "-" for t in clean], batch_size=64)
+    return _records_from_spans(clean, results)
 
 
 def _numpy_model(model_path: str) -> dict:
@@ -184,7 +192,7 @@ def _token_offsets(text: str, tokens: list[str]) -> list[tuple[int, int]]:
     return offs
 
 
-def _extract_batch_numpy(clean: pd.Series, model_path: str) -> list[dict]:
+def _extract_batch_numpy(clean: list[str], model_path: str) -> list[dict]:
     """Numpy token-classification backend: REAL tensor inference (hashed
     char-trigram bag → embedding mean → linear → softmax → argmax BIO) from a
     committed random-weight checkpoint, emitting char-offset spans with HF
@@ -200,9 +208,8 @@ def _extract_batch_numpy(clean: pd.Series, model_path: str) -> list[dict]:
     m = _numpy_model(model_path)
     emb, w, b, labels = m["emb"], m["w"], m["b"], m["labels"]
     v = emb.shape[0]
-    texts = clean.fillna("").tolist()
     results: list[list[dict]] = []
-    for text in texts:
+    for text in clean:
         tokens = tp.tokenize_text(text)
         if not tokens:
             results.append([])
@@ -247,7 +254,7 @@ def _extract_batch_numpy(clean: pd.Series, model_path: str) -> list[dict]:
             s.pop("_score_sum")
             s.pop("_n")
         results.append(spans)
-    return _records_from_spans(texts, results)
+    return _records_from_spans(clean, results)
 
 
 def extract_entities(
@@ -259,20 +266,13 @@ def extract_entities(
     target_partitions: int | None = None,
     include_tokens: bool = True,
     include_clean_text: bool = True,
-    jvm_barrier: bool = True,
-    colocate_duplicates: bool = False,
 ) -> DataFrame:
     """messages → messages + entity columns. Narrow plan, zero shuffles.
 
-    jvm_barrier (rules_jvm backend only): the returned plan ends in a
-    localCheckpoint(eager=False) optimizer barrier that stops CollapseProject
-    re-inlining the automaton into every downstream reference. The barrier's
-    MEMORY_AND_DISK blocks live until the returned DataFrame is GC'd — in a
-    long-lived session making many rules_jvm calls, either unpersist with
-    df.rdd.unpersist() when done, or pass jvm_barrier=False and place your
-    own barrier/checkpoint downstream (an un-barriered plan consumed by
-    multi-reference consumers re-expands multiplicatively; plan-size pinned
-    by tests/test_plan_quality.py).
+    backend: ``rules``, ``numpy`` or ``hf`` (module docstring); any other
+    value raises ValueError here, before any Spark action. model_dir is the
+    checkpoint the ``numpy``/``hf`` backends load; with_contact_rule applies
+    to ``rules`` only.
 
     target_partitions: optionally repartition the input first. With exactly
     one task per core a single straggler idles the whole stage tail; 2-4×
@@ -285,83 +285,31 @@ def extract_entities(
     read them — pass False in throughput-critical pipelines (≈half the
     Arrow traffic); keep True where predictions_table / NER metrics are
     needed.
-
-    colocate_duplicates (requires target_partitions): hash-partition the
-    repartition on text_col instead of round-robin. Identical output; the
-    difference is WHERE duplicate texts land. The rules backend memoizes
-    finished records per worker (kernels/labeler.py:_RECORD_CACHE), but a
-    round-robin shuffle scatters a text's copies across all workers, so the
-    per-worker hit rate is only the WITHIN-PARTITION duplicate rate (~8% on
-    the bench corpus vs 36% global). Hash-partitioning makes every copy of
-    a text land in one partition, lifting the memo hit rate to the global
-    duplicate rate for the same shuffle cost. Tradeoff: copies of one text
-    become one shuffle key, so a mega-duplicated corpus (one text = a
-    partition's worth of rows) skews the stage — leave this off there, or
-    better, run exact dedup first (operators/dedup.py; curate() already
-    dedups before heavy stages). For moderately-duplicated corpora (the
-    web-crawl norm) the 2-4× cores partition count leaves stragglers slack.
-    Measured (36%-duplicate bench corpus, 2M msgs, local[16]): the hit-rate
-    lift is real (8% → 36% by partition-level dup accounting) but the
-    wall-clock delta sits below the sandbox's ±10% noise floor — the win
-    case is corpora whose duplicate mass, not just rate, is large.
     """
+    # the per-backend map from a batch's DISTINCT clean texts to records;
+    # everything else about the boundary is shared
+    if backend == "rules":
+        records = partial(_extract_batch_rules, with_contact_rule=with_contact_rule)
+    elif backend == "numpy":
+        records = partial(_extract_batch_numpy, model_path=model_dir or "")
+    elif backend == "hf":
+        records = partial(_extract_batch_hf, model_dir=model_dir or "")
+    else:
+        raise ValueError(f"unknown backend {backend!r}; expected 'rules', 'numpy' or 'hf'")
+
     if target_partitions:
-        if colocate_duplicates:
-            df = df.repartition(target_partitions, F.col(text_col))
-        else:
-            # skip the round-robin shuffle (and its sort-before-repartition
-            # pass over every column) when the input is a narrow plan over a
-            # scan that already splits at least target_partitions ways — the
-            # load-balancing the repartition exists to buy (docstring below)
-            # is already provided by the many scan splits. Statically gated,
-            # same discipline as linking.spread: shuffle-bearing or
-            # unprobeable plans keep the explicit repartition.
-            from .linking import narrow_scan_splits
+        # skip the round-robin shuffle (and its sort-before-repartition
+        # pass over every column) when the input is a narrow plan over a
+        # scan that already splits at least target_partitions ways — the
+        # load-balancing the repartition exists to buy (docstring above)
+        # is already provided by the many scan splits. Statically gated,
+        # same discipline as linking.spread: shuffle-bearing or
+        # unprobeable plans keep the explicit repartition.
+        from .linking import narrow_scan_splits
 
-            splits = narrow_scan_splits(df, stop_at=target_partitions)
-            if splits is None or splits < target_partitions:
-                df = df.repartition(target_partitions)
-
-    if backend == "rules_jvm":
-        # pure-JVM path: expression-chain preprocess + fold-based BIO
-        # automaton — zero Python (interpreted HOF lambdas, outside codegen:
-        # the SEMANTICS TWIN / no-Python-worker fallback, measured ~4× slower
-        # than the pandas 'rules' backend — see functions/extract_expr.py).
-        # Assumes NFC input (functions/textnorm.py caveat).
-        from ..functions.extract_expr import with_entities_expr
-        from ..functions.textnorm import preprocess_expr
-
-        out = df.withColumn("preprocessed_text", preprocess_expr(F.col(text_col)))
-        out = with_entities_expr(out, clean_col="preprocessed_text",
-                                 with_contact_rule=with_contact_rule)
-        if not include_tokens:
-            out = out.drop("tokens", "labels")
-        if not include_clean_text:
-            out = out.drop("preprocessed_text")
-        if out.isStreaming:
-            # checkpoint is unsupported on streaming plans, so the barrier
-            # below cannot apply. Consequence (measured): a consumer that
-            # references an entity column more than once in one projection —
-            # emit_triples touches products 3× and price_values 2× — inlines
-            # the automaton per reference, ~11× plan text at toy scale
-            # (bounded LINEAR in reference count, not the exponential union
-            # re-expansion the barrier exists for; plan-size pinned by
-            # tests/test_streaming.py). For throughput-critical streaming
-            # triples prefer backend='rules' (pandas) — this path is the
-            # no-Python-worker fallback.
-            return out
-        # optimizer barrier (same discipline as similarity.knn_lsh): without
-        # it CollapseProject inlines the single-use automaton columns into
-        # every downstream consumer branch — a fused extract→triples plan
-        # re-expands 180× (measured: 48 KB analyzed → 8.8 MB optimized,
-        # 69 MiB task binary, executor OOM in task DEserialization at 32-way
-        # parallelism). eager=False: materializes per-partition at first
-        # action, MEMORY_AND_DISK, no extra job while building the plan.
-        # Lifetime note: the checkpoint blocks live until the returned
-        # DataFrame is GC'd — in a long-lived session, unpersist via
-        # df.rdd.unpersist() or scope the result, as with any persist
-        # (jvm_barrier=False opts out; see docstring).
-        return out.localCheckpoint(eager=False) if jvm_barrier else out
+        splits = narrow_scan_splits(df, stop_at=target_partitions)
+        if splits is None or splits < target_partitions:
+            df = df.repartition(target_partitions)
 
     drop = set()
     if not include_tokens:
@@ -373,88 +321,43 @@ def extract_entities(
     array_fields = [f.name for f in fields if f.name != "preprocessed_text"]
     entity_struct = T.StructType(fields)
 
-    if backend == "rules" and hasattr(F, "arrow_udf"):
-        # Arrow-native scalar UDF (Spark 4.1+): the batch arrives as a
-        # pyarrow Array and the struct result is built as pyarrow arrays
-        # directly — no pandas Series/DataFrame construction on either side
-        # of the boundary. Factorize: preprocess + label each DISTINCT raw
-        # text once per batch (plus the cross-batch _CLEAN_CACHE /
-        # _RECORD_CACHE memos) and expand per-row by code — element-wise
-        # identical to running the chain on every row, since both kernels
-        # are pure in the text.
-        @F.arrow_udf(entity_struct)
-        def extract_arrow_udf(texts):
-            import pyarrow as pa
-            import pyarrow.compute as pc
+    # Arrow-native scalar UDF: the batch arrives as a pyarrow Array and the
+    # struct result is built as pyarrow arrays directly — no pandas
+    # Series/DataFrame construction on either side of the boundary.
+    # Factorize: preprocess + extract each DISTINCT raw text once per batch
+    # (plus the cross-batch _CLEAN_CACHE memo and, for rules, the labeler's
+    # _RECORD_CACHE) and expand
+    # per-row by code — element-wise identical to running the chain on every
+    # row, since every backend is pure in the text.
+    @F.arrow_udf(entity_struct)
+    def extract_arrow_udf(texts):
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-            # factorize in C (null_encoding='encode' keeps None a dictionary
-            # entry, matching the Python-dict factorize this replaces), run
-            # the kernels on the uniques only, and expand per-row with
-            # pc.take — so the Python→Arrow conversion of the result lists
-            # also happens once per DISTINCT text, not once per row.
-            enc = pc.dictionary_encode(texts, null_encoding="encode")
-            codes = enc.indices
-            uniq = enc.dictionary.to_pylist()
-            clean_u = _preprocess_unique(uniq)
-            recs_u = [lb.extract_message_cached(c, with_contact_rule=with_contact_rule)
-                      for c in clean_u]
-            arrays, names = [], []
-            if "preprocessed_text" not in drop:
-                arrays.append(pc.take(pa.array(clean_u, type=pa.string()), codes))
-                names.append("preprocessed_text")
-            for field in array_fields:
-                elem = pa.float64() if field == "price_values" else pa.string()
-                u_arr = pa.array([r[field] for r in recs_u], type=pa.list_(elem))
-                arrays.append(pc.take(u_arr, codes))
-                names.append(field)
-            return pa.StructArray.from_arrays(arrays, names=names)
-
-        ent = F.col("_entities")
-        return (df.withColumn("_entities", extract_arrow_udf(F.col(text_col)))
-                .select("*", *[ent[f.name].alias(f.name) for f in fields])
-                .drop("_entities"))
-
-    @F.pandas_udf(entity_struct)
-    def extract_udf(texts: pd.Series) -> pd.DataFrame:
-        if backend == "rules":
-            # pandas twin of the arrow_udf path above (pre-4.1 fallback) —
-            # same factorize + memo discipline, same element-wise output
-            import numpy as np
-
-            codes, uniques = texts.factorize(use_na_sentinel=False)
-            uvals = np.asarray(uniques, dtype=object)
-            clean_u = _preprocess_unique(uvals)
-            recs_u = [lb.extract_message_cached(c, with_contact_rule=with_contact_rule)
-                      for c in clean_u]
-            out = pd.DataFrame(index=pd.RangeIndex(len(texts)))
-            if "preprocessed_text" not in drop:
-                cvals = np.empty(len(clean_u), dtype=object)
-                cvals[:] = clean_u
-                out["preprocessed_text"] = cvals[codes]
-            for field in array_fields:
-                fvals = np.empty(len(recs_u), dtype=object)
-                fvals[:] = [r[field] for r in recs_u]
-                out[field] = fvals[codes]
-            return out
-        clean = tp.preprocess_series(texts)
-        if backend == "hf":
-            recs = _extract_batch_hf(clean, model_dir or "")
-        elif backend == "numpy":
-            recs = _extract_batch_numpy(clean, model_dir or "")
-        else:
-            raise ValueError(f"unknown backend {backend!r}")
-        out = pd.DataFrame(index=clean.reset_index(drop=True).index)
+        # factorize in C (null_encoding='encode' keeps None a dictionary
+        # entry), run the kernels on the uniques only, and expand per-row
+        # with pc.take — so the Python→Arrow conversion of the result lists
+        # also happens once per DISTINCT text, not once per row.
+        enc = pc.dictionary_encode(texts, null_encoding="encode")
+        codes = enc.indices
+        uniq = enc.dictionary.to_pylist()
+        clean_u = _preprocess_unique(uniq)
+        recs_u = records(clean_u)
+        arrays, names = [], []
         if "preprocessed_text" not in drop:
-            out["preprocessed_text"] = clean.reset_index(drop=True)
+            arrays.append(pc.take(pa.array(clean_u, type=pa.string()), codes))
+            names.append("preprocessed_text")
         for field in array_fields:
-            out[field] = [r[field] for r in recs]
-        return out
+            elem = pa.float64() if field == "price_values" else pa.string()
+            u_arr = pa.array([r[field] for r in recs_u], type=pa.list_(elem))
+            arrays.append(pc.take(u_arr, codes))
+            names.append(field)
+        return pa.StructArray.from_arrays(arrays, names=names)
 
-    # struct-returning pandas UDF: ONLY text_col crosses the Arrow boundary;
-    # all other columns stay JVM-side (vs mapInPandas, which would round-trip
-    # the full row through Python for nothing)
+    # struct-returning scalar UDF: ONLY text_col crosses the Arrow boundary;
+    # all other columns stay JVM-side
     ent = F.col("_entities")
-    return (df.withColumn("_entities", extract_udf(F.col(text_col)))
+    return (df.withColumn("_entities", extract_arrow_udf(F.col(text_col)))
             .select("*", *[ent[f.name].alias(f.name) for f in fields])
             .drop("_entities"))
 

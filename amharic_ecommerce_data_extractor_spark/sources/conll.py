@@ -39,7 +39,8 @@ identity and skip that step entirely.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window
 
 CONLL_COLUMNS = ["sentence_id", "tokens", "labels"]
@@ -196,12 +197,17 @@ def write_labeling_file(messages: "DataFrame", path: str, n_messages: int = 50,
     """First-N messages as a token-per-line file with blank separators — the
     reference's manual-labeling prep (``prepare_data_for_labeling.py:12-79``;
     dead code there: it passes a kwarg that doesn't exist — reimplemented
-    working, same intended output shape)."""
-    from ..functions.textnorm import preprocess_expr, tokenize_expr
+    working, same intended output shape). Tokens come from the same
+    kernels.textprep chain the extraction operator runs."""
+    from ..kernels import textprep as tp
+
+    @F.pandas_udf(T.ArrayType(T.StringType()))
+    def tokens_udf(texts: pd.Series) -> pd.Series:
+        return tp.tokenize_series(tp.preprocess_series(texts))
 
     body = (messages.orderBy("message_id").limit(n_messages)
             .select(F.concat(
-                F.array_join(tokenize_expr(preprocess_expr(F.col(text_col))), "\n"),
+                F.array_join(tokens_udf(F.col(text_col)), "\n"),
                 F.lit("\n"),
             ).alias("value")))
     body.coalesce(1).write.mode("overwrite").text(path)

@@ -178,19 +178,34 @@ def test_conll_to_csv(spark, sample_path, tmp_path):
 
 
 def test_write_labeling_file(spark, tmp_path):
+    import unicodedata
+
+    from amharic_ecommerce_data_extractor_spark.kernels import textprep as tp
     from amharic_ecommerce_data_extractor_spark.sources.conll import write_labeling_file
 
-    msgs = spark.createDataFrame(
-        [(1, "ሰላም ዋጋ 500 ብር"), (2, "blender 750"), (3, "skip me")],
-        "message_id long, content string")
+    texts = [
+        "ሰላም ዋጋ 500 ብር",
+        "blender 750",
+        "ሃሎ ኋይት",                                      # glyph variants
+        "ዋጋው ፻፳፭ ብር ነው። ፰፻",                          # Geez numerals
+        unicodedata.normalize("NFD", "café ዋጋ ፻፳፭ ብር"),  # needs NFC first
+        "skip me",
+    ]
+    msgs = spark.createDataFrame(list(enumerate(texts, start=1)),
+                                 "message_id long, content string")
     out = str(tmp_path / "labeling")
-    write_labeling_file(msgs, out, n_messages=2)
+    write_labeling_file(msgs, out, n_messages=5)
     text = spark.read.text(out).collect()
     lines = [r["value"] for r in text]
     # token-per-line with blank separators, first N messages only
     assert "ሰላም" in lines and "500" in lines and "blender" in lines
     assert all("skip" not in ln for ln in lines)
     assert "" in lines  # blank separator rows survive
+    # exactly the preprocess + tokenize kernels, message by message
+    want = [tok for t in texts[:5]
+            for tok in tp.tokenize_text(tp.preprocess_text(t)) + [""]]
+    assert lines == want
+    assert "caf" in lines
 
 
 # ---------------------------------------------------------------------------

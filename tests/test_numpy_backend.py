@@ -105,3 +105,26 @@ def test_numpy_backend_composes_with_kg_downstream(spark):
         <= {"sells", "priced_at", "located_in", "contact"}
     sc = vendor_scorecard(ext)
     assert sc.count() == msgs.select("repo").distinct().count()
+
+
+def test_numpy_backend_factorizes_repeated_texts(spark):
+    """Repeated texts, None and "" inside ONE Arrow batch: one row out per
+    row in, copies of a text get identical records, and each record equals
+    the one that text gets when it is extracted alone."""
+    from amharic_ecommerce_data_extractor_spark.operators.extract import ENTITY_FIELDS
+
+    cols = [f.name for f in ENTITY_FIELDS]
+    texts = [TEXTS[0], None, TEXTS[1], TEXTS[0], "", TEXTS[1], None, TEXTS[0], ""]
+
+    def records(batch):
+        df = spark.createDataFrame(list(enumerate(batch)),
+                                   "message_id long, content string").coalesce(1)
+        out = extract_entities(df, backend="numpy", model_dir=MODEL).collect()
+        return {r["message_id"]: tuple(r[c] for c in cols) for r in out}
+
+    got = records(texts)
+    assert sorted(got) == list(range(len(texts)))
+    for text in set(texts):
+        (alone,) = records([text]).values()
+        copies = [got[i] for i, t in enumerate(texts) if t == text]
+        assert copies == [alone] * len(copies), text
