@@ -56,6 +56,22 @@ def _parse_byte_string(raw: str, default: int = 128 << 20) -> int:
     return int(m.group(1)) * mult if mult else default
 
 
+def max_partition_bytes(spark) -> int:
+    """The session's scan split size, spark.sql.files.maxPartitionBytes."""
+    return _parse_byte_string(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20)))
+
+
+def file_sizes(spark, files):
+    """Sizes of the given files (``DataFrame.inputFiles()``) through the
+    Hadoop FileSystem: one stat per file, no Spark job."""
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    for f in files:
+        p = jvm.org.apache.hadoop.fs.Path(f)
+        yield p.getFileSystem(hconf).getFileStatus(p).getLen()
+
+
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     """Raise the partition count to the session's core count before a
     CPU-heavy narrow stage — and ONLY when the input is a narrow plan over
@@ -118,14 +134,9 @@ def narrow_scan_splits(df: DataFrame, stop_at: int | None = None) -> int | None:
             return None
         if stop_at is not None and len(files) >= stop_at:
             return len(files)
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-        max_bytes = _parse_byte_string(raw)
+        max_bytes = max_partition_bytes(spark)
         splits = 0
-        for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            size = p.getFileSystem(hconf).getFileStatus(p).getLen()
+        for size in file_sizes(spark, files):
             splits += max(1, -(-size // max_bytes))
             if stop_at is not None and splits >= stop_at:
                 return splits

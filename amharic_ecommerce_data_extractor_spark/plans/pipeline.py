@@ -1,19 +1,21 @@
 """End-to-end staged KG-construction pipeline (the rebuild of the reference's
 5-stage CLI ``scripts/run_pipeline.py:251-287`` as a checkpointed Spark DAG).
 
-Stages (each checkpointed with per-partition lineage, resumable):
+Stages (each checkpointed with a lineage manifest, resumable):
 
   ingest     raw message corpus (synthetic generator here; any parquet/Iceberg
              table of the graft shape in production) + sha256 verification
   extract    fused preprocess→tokenize→BIO→entities (one Arrow stage),
-             chunked for intra-stage resume; sha256 re-verified after
+             chunked for intra-stage resume (chunk count sized from the
+             input, see extract_chunks); sha256 re-verified after
   triples    (subj, pred, obj, message_id, confidence) emission
   link       MinHash-LSH blocking + connected components → canonical surfaces
   graph      canonical nodes + canonical triples (the materialized KG)
   scorecard  vendor KPI + lending score over the canonical graph
 
 Run:  python -m amharic_ecommerce_data_extractor_spark.plans.pipeline \\
-          --workdir /tmp/kg --messages 5000 [--input <parquet>] [--cpus 8]
+          --workdir /tmp/kg --messages 5000 [--input <parquet>] [--cpus 8] \\
+          [--chunks N]
 
 A re-run with the same --workdir resumes: finished stages (and finished
 chunks inside the extract stage) are read back, not recomputed.
@@ -30,10 +32,29 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extract import extract_entities
 from ..operators.graph_features import vendor_graph_features
-from ..operators.linking import canonicalize_surfaces, canonicalize_triples
+from ..operators.linking import (
+    canonicalize_surfaces, canonicalize_triples, file_sizes, max_partition_bytes,
+)
 from ..operators.scorecard import vendor_scorecard
 from ..operators.triples import emit_triples
 from ..sources import checkpoint as ckpt
+
+MAX_EXTRACT_CHUNKS = 8
+# input-size estimate for the generated corpus (no files to stat)
+GENERATED_BYTES_PER_MESSAGE = 128
+CHUNKS_HELP = ("extract chunks (resume units); default: "
+               "ceil(input bytes / (spark.sql.files.maxPartitionBytes x "
+               "spark.default.parallelism)), limited to 1..8")
+
+
+def extract_chunks(input_bytes: int, split_bytes: int, parallelism: int) -> int:
+    """Number of extract chunks for an input of ``input_bytes``: each chunk
+    must span at least one full scan split per core (``split_bytes ×
+    parallelism``), so a small input is one chunk and pays the per-chunk
+    job costs once; at most MAX_EXTRACT_CHUNKS, so large inputs are chunked
+    as before."""
+    return max(1, min(MAX_EXTRACT_CHUNKS,
+                      -(-input_bytes // (split_bytes * parallelism))))
 
 
 def entity_surfaces(extracted: DataFrame) -> DataFrame:
@@ -76,7 +97,7 @@ def run_pipeline(
     workdir: str,
     n_messages: int = 5000,
     input_path: str | None = None,
-    n_chunks: int = 8,
+    n_chunks: int | None = None,
     lsh_threshold: float = 0.6,
     verify_lineage: bool = False,
     n_buckets: int = 16,
@@ -87,8 +108,25 @@ def run_pipeline(
     sinks are format-dispatched (sources/checkpoint.py write_stage).
     verify_lineage=True re-verifies every completed stage checkpoint against
     its _lineage manifest (partition-invariant signature fold) at the end —
-    one extra scan per stage, the paranoid/audit mode."""
+    one extra scan per stage, the paranoid/audit mode.
+
+    n_chunks=None derives the extract chunk count from the input size
+    (extract_chunks): the summed input file sizes with input_path, else
+    n_messages × GENERATED_BYTES_PER_MESSAGE. An explicit n_chunks is used
+    as given. A resume must arrive at the chunk count of the run it resumes
+    (the chunked_stage manifest and _chunk guards fail loudly otherwise), so
+    pass n_chunks explicitly when resuming on a session with a different
+    parallelism or split size.
+
+    The summary counts are read from the stages' _STAGE_DONE markers, not
+    counted again."""
     os.makedirs(workdir, exist_ok=True)
+    source = spark.read.parquet(input_path) if input_path else None
+    if n_chunks is None:
+        input_bytes = (sum(file_sizes(spark, source.inputFiles())) if input_path
+                       else n_messages * GENERATED_BYTES_PER_MESSAGE)
+        n_chunks = extract_chunks(input_bytes, max_partition_bytes(spark),
+                                  spark.sparkContext.defaultParallelism)
     metrics: dict[str, float] = {}
 
     def timed(name, fn):
@@ -102,7 +140,7 @@ def run_pipeline(
     # (one total pass over the input, not n_chunks full scans)
     def build_ingest():
         if input_path:
-            raw = spark.read.parquet(input_path)
+            raw = source
         else:
             from ..data.synthetic import generate_messages
 
@@ -155,7 +193,7 @@ def run_pipeline(
     # Stage 4: materialized graph (canonical triples + nodes)
     canon_triples = timed("graph_triples", lambda: ckpt.run_stage(
         spark, workdir, "graph_triples", lambda: canonicalize_triples(triples, canon)))
-    nodes = timed("graph_nodes", lambda: ckpt.run_stage(
+    timed("graph_nodes", lambda: ckpt.run_stage(
         spark, workdir, "graph_nodes", lambda: graph_nodes(canon, canon_triples)))
 
     # Stage 5: vendor scorecard + graph-derived vendor features.
@@ -163,20 +201,23 @@ def run_pipeline(
     # there is no diamond-recompute risk and the broadcast normalization
     # avoids the single-partition window (a straggler at high vendor
     # cardinality)
-    scorecard = timed("scorecard", lambda: ckpt.run_stage(
+    timed("scorecard", lambda: ckpt.run_stage(
         spark, workdir, "scorecard",
         lambda: vendor_scorecard(extracted, stats_mode="broadcast")))
-    graph_feats = timed("graph_features", lambda: ckpt.run_stage(
+    timed("graph_features", lambda: ckpt.run_stage(
         spark, workdir, "graph_features",
         lambda: vendor_graph_features(canon_triples, stats_mode="broadcast")))
 
+    def rows(stage: str) -> int:
+        return ckpt.committed_rows(os.path.join(workdir, stage))
+
     summary = {
         "workdir": workdir,
-        "messages": messages.count(),
-        "triples": canon_triples.count(),
-        "nodes": nodes.count(),
-        "vendors": scorecard.count(),
-        "vendors_with_graph_features": graph_feats.count(),
+        "messages": rows("ingest"),
+        "triples": rows("graph_triples"),
+        "nodes": rows("graph_nodes"),
+        "vendors": rows("scorecard"),
+        "vendors_with_graph_features": rows("graph_features"),
         "stage_seconds": metrics,
     }
     if verify_lineage:
@@ -205,7 +246,7 @@ def main() -> None:
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--messages", type=int, default=5000)
     ap.add_argument("--input", default=None)
-    ap.add_argument("--chunks", type=int, default=8)
+    ap.add_argument("--chunks", type=int, default=None, help=CHUNKS_HELP)
     ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--verify-lineage", action="store_true")
     ap.add_argument("--gc-chunks", action="store_true",

@@ -1,14 +1,16 @@
-"""Per-stage checkpointing with per-partition lineage and resume (graft
-operator G5).
+"""Per-stage checkpointing with lineage and resume (graft operator G5).
 
 Every pipeline stage writes:
 * its data as parquet under ``<workdir>/<stage>/data`` (the checkpoint —
   doubles as the cache between stages and the resume point);
-* a ``_lineage`` parquet: one row per output partition with row count and an
-  order-insensitive content signature (bit_xor of xxhash64 over all columns),
-  plus the per-row ``content_sha256`` invariant aggregate when present;
-* a ``_STAGE_DONE`` JSON marker (stage name, rows, wall time) written LAST —
-  its presence is the commit point of the stage.
+* a ``_lineage`` parquet: one row per commit with the row count and an
+  order-insensitive content signature (bit_xor of xxhash64 over all columns,
+  in read-back order), plus the per-row ``content_sha256`` invariant
+  aggregate when present. The values come from an ``Observation`` on the
+  write itself, so a commit is ONE Spark job: no read-back, no count;
+* a ``_STAGE_DONE`` JSON marker (stage name, rows, wall time) written LAST
+  and atomically (temp file + ``os.replace``) — its presence is the commit
+  point of the stage.
 
 Resume = skip stages whose marker exists. For long Python-heavy stages,
 ``chunked_stage`` hash-splits the input on a key into N chunks and commits
@@ -56,9 +58,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 MARKER = "_STAGE_DONE"
 CHUNK_COL = "_chunk"
@@ -82,16 +87,50 @@ def stage_done(stage_dir: str) -> bool:
     return os.path.exists(_marker_path(stage_dir))
 
 
-def lineage_frame(df: DataFrame) -> DataFrame:
-    """Per-partition lineage: row count + order-insensitive signature over all
-    columns; carries the sha256 invariant aggregate when the column exists."""
-    cols = df.columns
-    sig = F.expr(f"bit_xor(xxhash64({', '.join(cols)}))")
-    aggs = [F.count("*").alias("n_rows"), sig.alias("content_sig")]
+def committed_rows(stage_dir: str) -> int:
+    """Row count a completed stage committed in its _STAGE_DONE marker."""
+    with open(_marker_path(stage_dir), encoding="utf-8") as f:
+        return json.load(f)["rows"]
+
+
+def _write_json(path: str, obj: dict) -> None:
+    """Atomic marker write: a dump that fails partway leaves the previous
+    file (or none), never an empty marker that reads as committed."""
+    tmp = path + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _observe_lineage(df: DataFrame, partition_by: list[str] | None
+                     ) -> tuple[DataFrame, Observation]:
+    """Attach the lineage aggregates to the frame being written. Columns are
+    hashed in the order the checkpoint reads back (a hive-partitioned read
+    appends the partition columns), so verify_stage_lineage's fresh
+    signature over the read-back agrees."""
+    parts = list(partition_by or [])
+    cols = [c for c in df.columns if c not in parts] + parts
+    aggs = [F.count(F.lit(1)).alias("n_rows"),
+            F.bit_xor(F.xxhash64(*cols)).alias("content_sig")]
     if "content_sha256" in cols:
-        aggs.append(F.expr("bit_xor(xxhash64(content_sha256))").alias("sha256_sig"))
-    return (df.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id").agg(*aggs))
+        aggs.append(F.bit_xor(F.xxhash64("content_sha256")).alias("sha256_sig"))
+    obs = Observation()
+    return df.observe(obs, *aggs), obs
+
+
+def _write_lineage(stage_dir: str, lineage: dict) -> None:
+    """Write the one-row _lineage table with local file IO (like the
+    markers; no Spark job), replacing the directory so no part file of an
+    earlier commit survives."""
+    columns = {"partition_id": pa.array([0], pa.int32())}
+    columns.update({k: pa.array([v], pa.int64()) for k, v in lineage.items()})
+    path = os.path.join(stage_dir, "_lineage")
+    tmp = path + ".tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    pq.write_table(pa.table(columns), os.path.join(tmp, "part-00000.parquet"))
+    shutil.rmtree(path, ignore_errors=True)
+    os.replace(tmp, path)
 
 
 def _bucket_table_name(stage_dir: str) -> str:
@@ -141,10 +180,15 @@ def write_stage(df: DataFrame, stage_dir: str, stage: str,
     bucket key off this checkpoint plans with no exchange. Parquet-only in
     the sandbox (mutually exclusive with partition_by here); on Iceberg the
     equivalent is the `bucket(n, col)` partition transform. The spec is
-    committed in the marker so a resume re-registers the table by DDL."""
+    committed in the marker so a resume re-registers the table by DDL.
+
+    The commit is one Spark job (plus whatever the build itself triggers):
+    the row count and lineage signatures are observed on the write, then
+    _lineage and the marker are written with local file IO."""
     t0 = time.perf_counter()
     data_path = os.path.join(stage_dir, "data")
     spark = df.sparkSession
+    observed, obs = _observe_lineage(df, partition_by)
     if bucket_by is not None:
         if fmt != "parquet":
             raise ValueError(
@@ -156,26 +200,21 @@ def write_stage(df: DataFrame, stage_dir: str, stage: str,
         col, n = bucket_by
         table = _bucket_table_name(stage_dir)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-        (df.write.mode("overwrite").format(fmt).option("path", data_path)
+        (observed.write.mode("overwrite").format(fmt).option("path", data_path)
          .bucketBy(n, col).sortBy(col).saveAsTable(table))
-        out = spark.table(table)
     else:
-        w = df.write.mode("overwrite")
+        w = observed.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.format(fmt).save(data_path)
-        out = spark.read.format(fmt).load(data_path)
 
-    lin = lineage_frame(out)
-    lin.write.mode("overwrite").parquet(os.path.join(stage_dir, "_lineage"))
-    n_rows = int(spark.read.parquet(os.path.join(stage_dir, "_lineage"))
-                 .agg(F.sum("n_rows")).collect()[0][0] or 0)
-    marker = {"stage": stage, "rows": n_rows, "fmt": fmt,
+    lineage = obs.get
+    _write_lineage(stage_dir, lineage)
+    marker = {"stage": stage, "rows": int(lineage["n_rows"]), "fmt": fmt,
               "seconds": round(time.perf_counter() - t0, 3)}
     if bucket_by is not None:
         marker["bucket_by"] = [bucket_by[0], bucket_by[1]]
-    with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
-        json.dump(marker, f)
+    _write_json(_marker_path(stage_dir), marker)
 
 
 def checkpoint_format() -> str:
@@ -297,8 +336,7 @@ def chunked_stage(
                 f"{committed} vs requested {manifest}; restart the stage "
                 f"(delete the dir) or resume with the committed parameters")
     else:
-        with open(manifest_path, "w", encoding="utf-8") as f:
-            json.dump(manifest, f)
+        _write_json(manifest_path, manifest)
     if CHUNK_COL in source.columns:
         # guard against a committed _chunk domain wider than this loop: a
         # source bucketed 0..7 consumed with n_chunks=4 would silently drop
@@ -320,8 +358,7 @@ def chunked_stage(
         os.makedirs(cdir, exist_ok=True)
         part = source.where(chunk_key == chunk)
         write_stage(transform(part), cdir, f"{stage}/chunk={chunk}", fmt=fmt)
-    with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
-        json.dump({"stage": stage, "chunks": n_chunks}, f)
+    _write_json(_marker_path(stage_dir), {"stage": stage, "chunks": n_chunks})
     return spark.read.format(fmt).load(os.path.join(stage_dir, "chunk=*", "data"))
 
 
@@ -340,16 +377,13 @@ def gc_chunk_dirs(workdir: str, stage: str, finalized_stage: str) -> list[str]:
     stage's own marker and manifest are kept and annotated
     (``gc_chunks: true``); a later ``chunked_stage`` call on the collected
     dir fails loudly on that flag rather than silently recomputing."""
-    import shutil
-
     stage_dir = os.path.join(workdir, stage)
     fin_dir = os.path.join(workdir, finalized_stage)
     if not stage_done(fin_dir):
         raise ValueError(
             f"gc_chunk_dirs: finalize stage {fin_dir} has no marker — the "
             f"chunk dirs are still the only committed copy")
-    with open(_marker_path(fin_dir), encoding="utf-8") as f:
-        fin_rows = json.load(f)["rows"]
+    fin_rows = committed_rows(fin_dir)
     chunk_dirs = sorted(
         os.path.join(stage_dir, d) for d in os.listdir(stage_dir)
         if d.startswith("chunk=")) if os.path.isdir(stage_dir) else []
@@ -360,8 +394,7 @@ def gc_chunk_dirs(workdir: str, stage: str, finalized_stage: str) -> list[str]:
         if not stage_done(cdir):
             raise ValueError(f"gc_chunk_dirs: incomplete chunk {cdir} — "
                              f"the chunked stage never finished")
-        with open(_marker_path(cdir), encoding="utf-8") as f:
-            chunk_rows += json.load(f)["rows"]
+        chunk_rows += committed_rows(cdir)
     if chunk_rows != fin_rows:
         raise ValueError(
             f"gc_chunk_dirs: finalize stage {fin_dir} committed {fin_rows} "
@@ -373,8 +406,7 @@ def gc_chunk_dirs(workdir: str, stage: str, finalized_stage: str) -> list[str]:
         with open(_marker_path(stage_dir), encoding="utf-8") as f:
             marker = json.load(f)
         marker["gc_chunks"] = True
-        with open(_marker_path(stage_dir), "w", encoding="utf-8") as f:
-            json.dump(marker, f)
+        _write_json(_marker_path(stage_dir), marker)
     return chunk_dirs
 
 

@@ -21,19 +21,21 @@ from __future__ import annotations
 import argparse
 import json
 
+from amharic_ecommerce_data_extractor_spark.plans.pipeline import (
+    CHUNKS_HELP, run_pipeline,
+)
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--messages", type=int, default=5000)
     ap.add_argument("--input", default=None)
-    ap.add_argument("--chunks", type=int, default=8)
+    ap.add_argument("--chunks", type=int, default=None, help=CHUNKS_HELP)
     ap.add_argument("--verify-lineage", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
-
-    from amharic_ecommerce_data_extractor_spark.plans.pipeline import run_pipeline
 
     spark = SparkSession.builder.appName("kg_pipeline").getOrCreate()
     try:

@@ -1,6 +1,6 @@
-"""Checkpoint/lineage/resume: stage markers, per-partition lineage rows,
-sha256 invariant, and mid-run restart that does NOT recompute finished
-chunks."""
+"""Checkpoint/lineage/resume: stage markers, the observed lineage row,
+sha256 invariant, mid-run restart that does NOT recompute finished chunks,
+and the extract chunk count derived from the input size."""
 
 import json
 import os
@@ -84,6 +84,12 @@ def test_full_pipeline_and_resume(spark, tmp_path):
 
     marker = json.load(open(f"{wd}/scorecard/{ckpt.MARKER}"))
     assert marker["rows"] == s1["vendors"]
+
+    # the summary comes from the markers; each value is the stage's count()
+    for key, stage in (("messages", "ingest"), ("triples", "graph_triples"),
+                       ("nodes", "graph_nodes"), ("vendors", "scorecard"),
+                       ("vendors_with_graph_features", "graph_features")):
+        assert s1[key] == s2[key] == spark.read.parquet(f"{wd}/{stage}/data").count(), key
 
 
 def test_write_stage_format_dispatch(spark, tmp_path):
@@ -251,3 +257,91 @@ def test_verify_stage_lineage_detects_tampering(spark, tmp_path):
     res2 = ckpt.verify_stage_lineage(spark, d)
     assert not res2["ok"]
     assert not res2["checks"]["n_rows"]
+
+
+def test_marker_dump_failure_leaves_stage_uncommitted(spark, tmp_path, monkeypatch):
+    """A marker dump that fails partway must not leave a marker behind:
+    stage_done stays False and a re-run commits."""
+    df = spark.range(20).withColumnRenamed("id", "message_id")
+    d = str(tmp_path / "st")
+
+    def boom(obj, f, *a, **k):
+        f.write("{")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(ckpt.json, "dump", boom)
+    with pytest.raises(OSError, match="disk full"):
+        ckpt.write_stage(df, d, "st")
+    assert not ckpt.stage_done(d)
+    monkeypatch.undo()
+
+    assert ckpt.run_stage(spark, str(tmp_path), "st", lambda: df).count() == 20
+    assert ckpt.stage_done(d) and ckpt.committed_rows(d) == 20
+
+
+def test_lineage_partition_column_not_last(spark, tmp_path):
+    """The observed signature hashes columns in read-back order: a
+    hive-partitioned read appends the partition column, so hashing in
+    write order would disagree with verify_stage_lineage."""
+    df = spark.range(300).select(
+        (F.col("id") % 3).cast("int").alias("bucket"), F.col("id").alias("message_id"),
+        F.concat(F.lit("m"), F.col("id")).alias("content"))
+    ckpt.run_stage(spark, str(tmp_path), "st", lambda: df, partition_by=["bucket"])
+    res = ckpt.verify_stage_lineage(spark, str(tmp_path / "st"))
+    assert res["ok"], res
+    assert ckpt.committed_rows(str(tmp_path / "st")) == 300
+
+
+def test_lineage_empty_frame(spark, tmp_path):
+    df = spark.range(0).select(
+        F.col("id").alias("message_id"),
+        F.sha2(F.col("id").cast("string"), 256).alias("content_sha256"))
+    ckpt.run_stage(spark, str(tmp_path), "st", lambda: df)
+    d = str(tmp_path / "st")
+    assert ckpt.committed_rows(d) == 0
+    res = ckpt.verify_stage_lineage(spark, d)
+    assert res["ok"], res
+
+
+def test_lineage_rerun_after_marker_loss_keeps_one_row_set(spark, tmp_path):
+    """A re-run of a stage whose marker was deleted replaces _lineage: one
+    file, one row, matching the new data."""
+    d = str(tmp_path / "st")
+    ckpt.run_stage(spark, str(tmp_path), "st", lambda: spark.range(50))
+    os.remove(os.path.join(d, ckpt.MARKER))
+    ckpt.run_stage(spark, str(tmp_path), "st", lambda: spark.range(70))
+    files = [f for f in os.listdir(os.path.join(d, "_lineage"))
+             if not f.startswith((".", "_"))]
+    assert len(files) == 1
+    lin = spark.read.parquet(os.path.join(d, "_lineage")).collect()
+    assert [r["n_rows"] for r in lin] == [70]
+    assert ckpt.verify_stage_lineage(spark, d)["ok"]
+
+
+def test_extract_chunks_rule():
+    from amharic_ecommerce_data_extractor_spark.plans.pipeline import extract_chunks
+
+    split, cores = 32 << 20, 4
+    assert extract_chunks(0, split, cores) == 1
+    assert extract_chunks(split * cores, split, cores) == 1
+    assert extract_chunks(split * cores + 1, split, cores) == 2
+    assert extract_chunks(3 * split * cores, split, cores) == 3
+    assert extract_chunks(1 << 50, split, cores) == 8
+
+
+def test_pipeline_sizes_chunks_from_input(spark, tmp_path):
+    """A small input_path with no n_chunks is one extract chunk, and its
+    outputs equal those of an explicit n_chunks=4 run on the same input."""
+    inp = str(tmp_path / "messages")
+    generate_messages(spark, n_rows=400, n_vendors=5).write.parquet(inp)
+    derived, fixed = str(tmp_path / "derived"), str(tmp_path / "fixed")
+    run_pipeline(spark, derived, input_path=inp)
+    run_pipeline(spark, fixed, input_path=inp, n_chunks=4)
+
+    chunks = sorted(c for c in os.listdir(os.path.join(derived, "extract"))
+                    if c.startswith("chunk="))
+    assert chunks == ["chunk=0"]
+    for stage in ("triples", "graph_triples", "scorecard"):
+        a = spark.read.parquet(os.path.join(derived, stage, "data"))
+        b = spark.read.parquet(os.path.join(fixed, stage, "data"))
+        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect())), stage
